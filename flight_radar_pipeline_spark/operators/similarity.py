@@ -1272,7 +1272,14 @@ def _f_round_double(x: float, decimals: int) -> float:
     binary expansion ``Decimal(x)`` is WRONG on halfway-repr doubles:
     ``F.round(lit(2.675), 2)`` = 2.68 on the engine while
     ``Decimal(2.675)`` = 2.67499…875 rounds to 2.67 (round-14 ADVICE
-    fix; regression-tested against the engine in tests/test_r7b_ops)."""
+    fix; regression-tested against the engine in tests/test_r7b_ops).
+
+    JDK dependency: ``repr`` equals ``Double.toString`` only on JDK 19
+    and later (JDK-4511638 made it shortest round-trip). Older JVMs can
+    print a longer decimal for rare boundary values, and the mirror may
+    then round differently from the engine. The regression test
+    ``test_mmr_round_mirror_matches_engine_f_round`` runs in the default
+    suite, so a JVM change shows up there."""
     from decimal import ROUND_HALF_UP, Decimal
 
     return float(

@@ -25,7 +25,11 @@ from flight_radar_pipeline_spark.operators.temporal import interval_overlap_pair
 from flight_radar_pipeline_spark.operators.prefix import ranged_cumulative
 from flight_radar_pipeline_spark.plans.battery import register
 from flight_radar_pipeline_spark.sources.readers import load_table
-from flight_radar_pipeline_spark.streaming.ledger import scratch_dir
+from flight_radar_pipeline_spark.streaming.ledger import (
+    run_microbatches,
+    scratch_dir,
+    wave_stream,
+)
 
 # --------------------------------------------------------------------------
 # grid-cell proximity self-join (bucketed vs naive-oracle)
@@ -1182,11 +1186,8 @@ def orders_cdc_stream_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     tombstones are GC'd past the replay horizon, exactly like
     stream-state watermarks."""
     import os
-    import tempfile
 
     from flight_radar_pipeline_spark.pipeline.silver import dedup_by_key
-
-    from flight_radar_pipeline_spark.streaming.ledger import stage_waves
 
     orders = load_table(spark, sf_dir, "orders")
     work = scratch_dir("cdc_stream_")
@@ -1205,15 +1206,7 @@ def orders_cdc_stream_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one wave-tagged write job, one file per batch, pinned ascending
     # mtimes (the shared ledger staging — the seq-keyed fold is
     # order-insensitive within a batch)
-    flat = stage_waves(work, [ins, upd, dels])
-
-    schema = ins.schema
-    log_stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(flat)
-    )
+    log_stream = wave_stream(spark, work, [ins, upd, dels])
     versions = [None]
 
     def fold(batch: DataFrame, _bid: int) -> None:
@@ -1230,13 +1223,7 @@ def orders_cdc_stream_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged.write.mode("overwrite").parquet(nxt)
         versions.append(nxt)
 
-    q = (
-        log_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_microbatches(log_stream, fold, work)
 
     final = spark.read.parquet(versions[-1]).filter(F.col("op") != "D")
     return final.select(
@@ -1923,7 +1910,6 @@ def user_kmv_stream_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
     forever, and answer any window without ever revisiting raw events.
     The exact yardstick column is computed batch-side as before."""
     import os
-    import tempfile
 
     from flight_radar_pipeline_spark.operators.sketches import (
         kmv_partials,
@@ -1932,24 +1918,9 @@ def user_kmv_stream_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     work = scratch_dir("kmv_stream_")
-    stage = os.path.join(work, "in")
-    os.makedirs(stage)
-    for i in range(3):
-        (
-            ev.filter(F.col("event_id") % 3 == i)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(stage, f"b{i}"))
-        )
-    flat = os.path.join(work, "flat")
-    os.makedirs(flat)
-    for i in range(3):
-        bdir = os.path.join(stage, f"b{i}")
-        for f in sorted(os.listdir(bdir)):
-            if f.endswith(".parquet"):
-                os.symlink(
-                    os.path.join(bdir, f), os.path.join(flat, f"{i:03d}.parquet")
-                )
+    stream = wave_stream(
+        spark, work, [ev.filter(F.col("event_id") % 3 == i) for i in range(3)]
+    )
 
     def day_partials(batch: DataFrame) -> DataFrame:
         return kmv_partials(
@@ -1968,17 +1939,7 @@ def user_kmv_stream_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
         p.write.mode("overwrite").parquet(nxt)
         versions.append(nxt)
 
-    physical = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    q = (
-        spark.readStream.schema(physical)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_microbatches(stream, fold, work)
 
     daily = spark.read.parquet(versions[-1])
     merged = merge_kmv_partials(
@@ -2258,7 +2219,6 @@ def event_drift_stream_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     monitoring pattern where a 100 TB feed keeps 3 numbers per
     (key, day) and the drift query never touches raw history."""
     import os
-    import tempfile
 
     from flight_radar_pipeline_spark.operators.sketches import (
         merge_moment_partials,
@@ -2267,25 +2227,9 @@ def event_drift_stream_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     work = scratch_dir("drift_stream_")
-    stage = os.path.join(work, "in")
-    os.makedirs(stage)
-    for i in range(3):
-        (
-            ev.filter(F.col("event_id") % 3 == i)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(stage, f"b{i}"))
-        )
-    flat = os.path.join(work, "flat")
-    os.makedirs(flat)
-    for i in range(3):
-        bdir = os.path.join(stage, f"b{i}")
-        for f in sorted(os.listdir(bdir)):
-            if f.endswith(".parquet"):
-                os.symlink(
-                    os.path.join(bdir, f), os.path.join(flat, f"{i:03d}.parquet")
-                )
-
+    stream = wave_stream(
+        spark, work, [ev.filter(F.col("event_id") % 3 == i) for i in range(3)]
+    )
     state_dir = os.path.join(work, "state")
 
     def fold(batch: DataFrame, bid: int) -> None:
@@ -2296,17 +2240,7 @@ def event_drift_stream_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).withColumn("b", F.lit(int(bid)))
         p.write.mode("append").parquet(state_dir)
 
-    physical = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    q = (
-        spark.readStream.schema(physical)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_microbatches(stream, fold, work)
 
     partials = spark.read.parquet(state_dir)
     overall = merge_moment_partials(partials, ["event_type"], ["d", "b"])
@@ -3379,7 +3313,6 @@ def event_hist_stream_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     KS drift, and now the stream), the sketch is a maintained asset, not
     a per-query intermediate."""
     import os
-    import tempfile
 
     from flight_radar_pipeline_spark.operators.sketches import (
         hist_partials,
@@ -3389,23 +3322,9 @@ def event_hist_stream_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     work = scratch_dir("hist_stream_")
-    flat = os.path.join(work, "in")
-    os.makedirs(flat)
-    for i in range(3):
-        bdir = os.path.join(work, f"b{i}")
-        (
-            ev.filter(F.col("event_id") % 3 == i)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(bdir)
-        )
-        for fname in sorted(os.listdir(bdir)):
-            if fname.endswith(".parquet"):
-                os.symlink(
-                    os.path.join(bdir, fname),
-                    os.path.join(flat, f"{i:03d}.parquet"),
-                )
-
+    stream = wave_stream(
+        spark, work, [ev.filter(F.col("event_id") % 3 == i) for i in range(3)]
+    )
     state_dir = os.path.join(work, "state")
 
     def fold(batch: DataFrame, bid: int) -> None:
@@ -3419,17 +3338,7 @@ def event_hist_stream_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).withColumn("b", F.lit(int(bid)))
         p.write.mode("append").parquet(state_dir)
 
-    physical = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    q = (
-        spark.readStream.schema(physical)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_microbatches(stream, fold, work)
 
     maintained = spark.read.parquet(state_dir).select(
         "event_type", "bucket", "bin_count"

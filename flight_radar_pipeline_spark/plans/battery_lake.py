@@ -14,8 +14,6 @@ cross-engine float formatting can never leak into a hash.
 from __future__ import annotations
 
 import os
-import tempfile
-
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,8 +24,13 @@ from flight_radar_pipeline_spark.operators.cdc import (
     snapshot_changes,
 )
 from flight_radar_pipeline_spark.plans.battery import register
-from flight_radar_pipeline_spark.sources.readers import load_table
-from flight_radar_pipeline_spark.streaming.ledger import scratch_dir, stage_waves
+from flight_radar_pipeline_spark.sources.readers import load_table, normalize_event_ts
+from flight_radar_pipeline_spark.streaming.ledger import (
+    link_stream,
+    run_microbatches,
+    scratch_dir,
+    wave_stream,
+)
 
 # --------------------------------------------------------------------------
 # snapshot diff (CDC between two table versions)
@@ -274,16 +277,8 @@ def orders_scd1_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     versions = [os.path.join(work, "v0")]
     orders.write.mode("overwrite").parquet(versions[0])
 
-    stage = os.path.join(work, "updates")
-    os.makedirs(stage)
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/orders.parquet"),
-        os.path.join(stage, "orders.parquet"),
-    )
-    physical = spark.read.parquet(f"{sf_dir}/orders.parquet").schema
     upd_stream = (
-        spark.readStream.schema(physical)
-        .parquet(stage)
+        link_stream(spark, work, f"{sf_dir}/orders.parquet")
         .filter(F.col("o_orderkey") % 10 == 0)
         .withColumn("o_totalprice", F.col("o_totalprice") + 1000)
     )
@@ -296,13 +291,7 @@ def orders_scd1_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).parquet(nxt)
         versions.append(nxt)
 
-    q = (
-        upd_stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_microbatches(upd_stream, merge_batch, work)
 
     final = spark.read.parquet(versions[-1])
     return final.select(
@@ -686,13 +675,12 @@ def daily_rollup_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     summing (mergeable partials must be exact across arbitrary batch
     splits). The final table equals the one-shot batch rollup, which
     the oracle states."""
-    from flight_radar_pipeline_spark.streaming.events import (
-        idempotent_rollup_merge,
-        read_events_stream,
-    )
+    from flight_radar_pipeline_spark.streaming.events import idempotent_rollup_merge
 
     work = scratch_dir("rollup_stream_")
-    feed = read_events_stream(spark, f"{sf_dir}/events.parquet")
+    feed = normalize_event_ts(
+        link_stream(spark, work, f"{sf_dir}/events.parquet")
+    )
 
     def delta_agg(batch: DataFrame) -> DataFrame:
         return batch.groupBy(
@@ -715,13 +703,7 @@ def daily_rollup_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         delta_agg,
     )
 
-    q = (
-        feed.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_microbatches(feed, merge_batch, work)
 
     return (
         read_final(spark)
@@ -1039,7 +1021,7 @@ def orders_scd2_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mtimes (the shared ledger staging); the per-batch ts loop below
     # makes ANY replay order correct, and scd2_apply is key-joined, so
     # within-file row order is immaterial
-    stage = stage_waves(work, waves)
+    upd_stream = wave_stream(spark, work, waves)
 
     def apply_batch(batch: DataFrame, _batch_id: int) -> None:
         effs = [r["eff"] for r in batch.select("eff").distinct().collect()]
@@ -1055,17 +1037,7 @@ def orders_scd2_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         cur.write.mode("overwrite").parquet(nxt)
         versions.append(nxt)
 
-    upd_schema = "o_orderkey bigint, o_totalprice double, eff string"
-    q = (
-        spark.readStream.schema(upd_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_microbatches(upd_stream, apply_batch, work)
 
     final = spark.read.parquet(versions[-1])
     return final.select(

@@ -16,7 +16,11 @@ from pyspark.sql import functions as F
 
 from flight_radar_pipeline_spark.plans.battery import register
 from flight_radar_pipeline_spark.sources.readers import load_table
-from flight_radar_pipeline_spark.streaming.ledger import scratch_dir
+from flight_radar_pipeline_spark.streaming.ledger import (
+    link_stream,
+    run_microbatches,
+    scratch_dir,
+)
 
 # --------------------------------------------------------------------------
 # chi-square independence: order priority × order status
@@ -854,7 +858,6 @@ def orders_scd3_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-your-own-writes loop safe and checkpoint-replayed batches
     idempotent."""
     import os
-    import tempfile
 
     from flight_radar_pipeline_spark.pipeline.silver import scd3_apply
 
@@ -867,16 +870,8 @@ def orders_scd3_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "overwrite"
     ).parquet(versions[0])
 
-    stage = os.path.join(work, "updates")
-    os.makedirs(stage)
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/orders.parquet"),
-        os.path.join(stage, "orders.parquet"),
-    )
-    physical = spark.read.parquet(f"{sf_dir}/orders.parquet").schema
     upd_stream = (
-        spark.readStream.schema(physical)
-        .parquet(stage)
+        link_stream(spark, work, f"{sf_dir}/orders.parquet")
         .filter(F.col("o_orderkey") % 10 == 0)
         .select(
             "o_orderkey",
@@ -895,12 +890,6 @@ def orders_scd3_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.mode("overwrite").parquet(nxt)
         versions.append(nxt)
 
-    q = (
-        upd_stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_microbatches(upd_stream, merge_batch, work)
 
     return spark.read.parquet(versions[-1]).orderBy("o_orderkey")

@@ -20,7 +20,11 @@ from flight_radar_pipeline_spark.operators import similarity as S
 from flight_radar_pipeline_spark.plans.battery import register
 from flight_radar_pipeline_spark.plans.battery_text import EMB_DIMS, _nibble_case
 from flight_radar_pipeline_spark.sources.readers import load_table
-from flight_radar_pipeline_spark.streaming.ledger import scratch_dir
+from flight_radar_pipeline_spark.streaming.ledger import (
+    run_microbatches,
+    scratch_dir,
+    wave_stream,
+)
 
 # --------------------------------------------------------------------------
 # nDCG@10 of the sign-LSH ANN ranking vs exact-cosine gains
@@ -286,10 +290,7 @@ def user_growth_stream_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     time over the |days| ledger. The final ledger must equal the batch
     entry — the oracle is shared verbatim."""
     import os
-    import tempfile
     from datetime import timedelta
-
-    from flight_radar_pipeline_spark.streaming.ledger import stage_waves
 
     ev = load_table(spark, sf_dir, "events")
     lohi = ev.agg(
@@ -311,7 +312,7 @@ def user_growth_stream_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ascending mtimes) — the shared ledger staging; the fold below is
     # keyed (distinct + per-user windows), so within-file row order is
     # immaterial
-    flat = stage_waves(work, waves)
+    stream = wave_stream(spark, work, waves)
 
     state_versions: list[str | None] = [None]
     ledger_dirs: list[str] = []
@@ -363,17 +364,7 @@ def user_growth_stream_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
         new_state.write.mode("overwrite").parquet(nxt)
         state_versions.append(nxt)
 
-    physical = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    q = (
-        spark.readStream.schema(physical)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_microbatches(stream, fold, work)
 
     ledger = spark.read.parquet(*ledger_dirs)
     w_d = Window.partitionBy().orderBy("day")

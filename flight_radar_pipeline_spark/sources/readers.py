@@ -47,13 +47,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (UTC) to match DuckDB's naive-timestamp presentation.
     """
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        ts_type = dict(df.dtypes)["ts"]
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type != "timestamp":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    return normalize_event_ts(df) if name == "events" else df
+
+
+def normalize_event_ts(events: DataFrame) -> DataFrame:
+    """``events.ts`` as TimestampType, batch or stream — see ``load_table``."""
+    ts_type = dict(events.dtypes)["ts"]
+    if ts_type == "bigint":
+        return events.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type != "timestamp":
+        return events.withColumn("ts", F.col("ts").cast("timestamp"))
+    return events
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES) -> dict[str, DataFrame]:

@@ -16,7 +16,6 @@ state store and per-microbatch admission via ``maxFilesPerTrigger``.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 from contextlib import contextmanager
 
@@ -29,6 +28,9 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from flight_radar_pipeline_spark.sources.readers import normalize_event_ts
+from flight_radar_pipeline_spark.streaming.ledger import link_stream, scratch_dir
 
 # legacy physical schema of events.parquet under nanosAsLong (older driver
 # testdata generations; see sources/readers.py for the normalization story)
@@ -91,27 +93,15 @@ def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
 
     The stream source needs an explicit schema; it is sniffed from the
     parquet footer with a batch read so the reader tracks whichever
-    physical ts encoding the current testdata generation uses.
-
-    The file source requires a *directory* (its PartitioningAwareFileIndex
-    insists basePath is a directory even when handed one concrete file), so
-    a bare-file path is staged as a symlink inside a scratch directory —
-    exactly how a production feed presents an append-only drop folder.
+    physical ts encoding the current testdata generation uses. A
+    bare-file path is streamed through a symlink in a scratch directory
+    (``ledger.link_stream``): the file source requires a directory.
     """
-    physical = spark.read.parquet(path).schema
     if os.path.isfile(path):
-        from flight_radar_pipeline_spark.streaming.ledger import scratch_dir
-
-        stage = scratch_dir("events_stream_")
-        os.symlink(os.path.abspath(path), os.path.join(stage, os.path.basename(path)))
-        path = stage
-    stream = spark.readStream.schema(physical).parquet(path)
-    ts_type = dict(stream.dtypes)["ts"]
-    if ts_type == "bigint":
-        return stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if ts_type != "timestamp":
-        return stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+        stream = link_stream(spark, scratch_dir("events_stream_"), path)
+    else:
+        stream = spark.readStream.schema(spark.read.parquet(path).schema).parquet(path)
+    return normalize_event_ts(stream)
 
 
 def hourly_counts_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:

@@ -278,3 +278,21 @@ def test_column_pruning_reaches_scan(name, table, cols, spark):
     head = scans[0].split("]")[0]
     n = head.count(",") + 1
     assert n <= cols, f"{name}: scan reads {n} columns of {table}, expected <= {cols}"
+
+
+def test_plans_leave_stream_scaffolding_to_the_ledger():
+    """Stream replay scaffolding and its scratch belong to
+    ``streaming/ledger.py`` (``wave_stream``/``link_stream`` →
+    ``run_microbatches``): no plans module hand-rolls a stream source, a
+    ``foreachBatch`` sink or a temp dir of its own."""
+    from pathlib import Path
+
+    import flight_radar_pipeline_spark.plans as plans
+
+    offenders = [
+        f"{path.name}: {token}"
+        for path in sorted(Path(plans.__file__).parent.rglob("*.py"))
+        for token in ("readStream", ".foreachBatch(", "tempfile")
+        if token in path.read_text()
+    ]
+    assert offenders == []
