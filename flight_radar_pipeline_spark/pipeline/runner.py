@@ -18,9 +18,15 @@ parquet → gold parquet) into one callable, engine-shaped:
 
 Scale: the only driver-side materialization is the optional zone fetch
 (bounded by the API, not the engine — and ``fetch_all_distributed`` ships
-it to executors); every stage after ingest is a lazy DataFrame plan, and
-the gold build broadcasts both dimensions so the fact table is never
-shuffled between silver and gold.
+it to executors). Bronze and silver are lazy plans over the ingested rows;
+gold is built from the silver rows this run landed, read back from
+storage, so the raw input is scanned and the ``id`` dedup shuffle runs
+once per batch, not once more for gold. The gold build broadcasts both
+dimensions, so the fact table is never shuffled between silver and gold.
+Every read-back passes its stored schema, so no read launches a
+schema-inference job. The silver read-back keeps ``run_id == <this run>``
+by Parquet filter pushdown, which still opens the footer of every silver
+file; pruning it to the batch's date partitions is not done yet.
 """
 
 from __future__ import annotations
@@ -31,6 +37,7 @@ from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from flight_radar_pipeline_spark import schemas
 from flight_radar_pipeline_spark.functions.continents import with_continent
@@ -61,20 +68,26 @@ def _get_or_create_dim(
     path: str,
     fetch: Callable[[], list] | None,
     schema,
+    fetched=None,
     enrich: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """Idempotent dimension materialization: write once, read always.
 
     ``mode("ignore")`` makes re-runs no-ops at the committer (no listing
     race); reading back from storage means a run that skipped the write and
-    a run that performed it see byte-identical dimensions.
+    a run that performed it see byte-identical dimensions. ``schema`` is
+    the stored shape, passed to the read-back so it launches no
+    schema-inference job; ``fetched`` is the shape of the fetched rows when
+    ``enrich`` derives columns from them (default: ``schema``). The gold
+    build applies the same rule to the fact: it reads the silver rows this
+    run landed instead of re-deriving them.
     """
     if fetch is not None:
-        dim = spark.createDataFrame(fetch(), schema=schema)
+        dim = spark.createDataFrame(fetch(), schema=fetched or schema)
         if enrich is not None:
             dim = enrich(dim)
         write_if_absent(dim, path)
-    return read_parquet(spark, path)
+    return read_parquet(spark, path, schema)
 
 
 def run_pipeline(
@@ -115,6 +128,14 @@ def run_pipeline(
       for intra-day incremental appends (it would clobber the day's
       earlier batches).
 
+    A ``run_id`` names one landing: gold is built from the silver rows on
+    storage stamped with this ``run_id``. Reusing a ``run_id`` under
+    ``"append"`` already breaks silver's one-row-per-(run_id, id)
+    invariant, and gold (and ``run_info["gold_rows"]``) now inherits
+    those duplicates. Under ``"overwrite_partitions"`` a reused
+    ``run_id`` is safe only for the same input: silver rows it left in
+    date partitions the rerun does not write are read back too.
+
     ``expectations`` (optional): named boolean rules applied between
     silver and gold; violating rows are appended to
     ``{base_path}/flights/quarantine`` with a ``rule`` label instead of
@@ -139,7 +160,8 @@ def run_pipeline(
         spark,
         airports_path,
         fetch_airports,
-        schemas.StructType(schemas.AIRPORTS.fields[:-1]),  # continent derived below
+        schemas.AIRPORTS,
+        fetched=schemas.StructType(schemas.AIRPORTS.fields[:-1]),  # continent derived below
         enrich=lambda df: with_continent(df, "country"),
     )
 
@@ -188,7 +210,15 @@ def run_pipeline(
         run_id=run_id, dynamic_overwrite=dynamic,
     )
 
-    gold = build_gold(silver, airports, airlines, how=join_how)
+    # gold reads the silver rows this run landed, not the silver plan (which
+    # would re-scan the raw input and re-run the dedup shuffle); the select
+    # drops run_id and year/month/day so gold keeps FLIGHTS_GOLD order
+    landed = (
+        read_parquet(spark, silver_path, schemas.FLIGHTS_SILVER_STORED)
+        .where(F.col("run_id") == run_id)
+        .select(*schemas.FLIGHTS_SILVER.fieldNames())
+    )
+    gold = build_gold(landed, airports, airlines, how=join_how)
     gold, g_obs = observed_counts(gold, f"gold-{run_id}")
     write_partitioned(
         gold, gold_path, ts_col="time", fmt="parquet",
@@ -212,6 +242,6 @@ def run_pipeline(
         bronze_path=bronze_path,
         silver_path=silver_path,
         gold_path=gold_path,
-        gold=read_parquet(spark, gold_path),
+        gold=read_parquet(spark, gold_path, schemas.FLIGHTS_GOLD_STORED),
         run_info=run_info,
     )

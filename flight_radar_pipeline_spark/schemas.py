@@ -103,6 +103,18 @@ FLIGHTS_GOLD = StructType(
     ]
 )
 
+# Stored fact shapes: the medallion runner stamps every landed silver/gold
+# row with its producing ``run_id`` (``sinks.writers.write_partitioned``).
+# Each is built from a fresh field list — ``StructType.add`` appends to the
+# list it was given, so ``StructType(FLIGHTS_SILVER.fields).add(...)`` would
+# grow the constant above on every call.
+FLIGHTS_SILVER_STORED = StructType(
+    [*FLIGHTS_SILVER.fields, StructField("run_id", StringType(), True)]
+)
+FLIGHTS_GOLD_STORED = StructType(
+    [*FLIGHTS_GOLD.fields, StructField("run_id", StringType(), True)]
+)
+
 # --- synthetic test-data star schema (TESTDATA.md) -------------------------
 # Declared so readers can assert, not infer; Parquet self-describes but an
 # explicit expectation catches silent upstream drift.

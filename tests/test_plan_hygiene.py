@@ -296,3 +296,36 @@ def test_plans_leave_stream_scaffolding_to_the_ledger():
         if token in path.read_text()
     ]
     assert offenders == []
+
+
+def test_runner_reads_pass_a_schema():
+    """Every Parquet read in ``pipeline/runner.py`` passes its stored
+    schema: a read without one launches a schema-inference job in every
+    batch."""
+    import ast
+    import inspect
+
+    from flight_radar_pipeline_spark.pipeline import runner
+
+    def has_schema(call: ast.Call) -> bool:
+        func = call.func
+        if isinstance(func, ast.Name):  # read_parquet(spark, path, schema)
+            return len(call.args) >= 3 or any(k.arg == "schema" for k in call.keywords)
+        chain = func.value  # <reader>.parquet(path): .schema(...) in the chain
+        while isinstance(chain, (ast.Call, ast.Attribute)):
+            if isinstance(chain, ast.Call) and getattr(chain.func, "attr", None) == "schema":
+                return True
+            chain = chain.func if isinstance(chain, ast.Call) else chain.value
+        return False
+
+    reads = [
+        node
+        for node in ast.walk(ast.parse(inspect.getsource(runner)))
+        if isinstance(node, ast.Call)
+        and (
+            getattr(node.func, "id", None) == "read_parquet"
+            or getattr(node.func, "attr", None) == "parquet"
+        )
+    ]
+    assert reads, "no Parquet read found in pipeline/runner.py"
+    assert [ast.unparse(n) for n in reads if not has_schema(n)] == []

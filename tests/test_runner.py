@@ -95,6 +95,94 @@ def test_rerun_append_is_distinguishable_and_dim_idempotent(spark, tmp_path, pdf
     assert latest.select("id").distinct().count() == latest.count()
 
 
+WARM_GROUP = "runner-warm-batch"
+
+
+@pytest.fixture(scope="module")
+def two_runs(spark, tmp_path_factory, pdfs):
+    """Two appended batches over disjoint halves of the raw flights (split
+    by id, so a re-sent id stays in one half). The second, warm batch (its
+    dimensions already landed) runs under its own job group."""
+    raw = pdfs["flights_raw"]
+    first = raw["id"].isin(set(sorted(raw["id"].unique())[::2]))
+    halves = {
+        run_id: spark.createDataFrame(half, schema=schemas.FLIGHTS_RAW)
+        for run_id, half in (("run-1", raw[first]), ("run-2", raw[~first]))
+    }
+    base = str(tmp_path_factory.mktemp("isolation"))
+    sc = spark.sparkContext
+    results = {}
+    for run_id, half in halves.items():
+        if run_id == "run-2":
+            sc.setJobGroup(WARM_GROUP, "warm run_pipeline batch")
+        try:
+            results[run_id] = run_pipeline(
+                spark,
+                base,
+                flights_raw=half,
+                fetch_airlines=lambda: pdfs["airlines"],
+                fetch_airports=lambda: pdfs["airports"],
+                run_id=run_id,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    warm_jobs = len(sc.statusTracker().getJobIdsForGroup(WARM_GROUP))
+    return {"raw": raw, "first": first, "results": results, "warm_jobs": warm_jobs}
+
+
+def test_each_run_lands_only_its_own_rows_in_gold(spark, two_runs, pdfs):
+    """Gold is built from the silver rows the run just landed: a run's gold
+    holds exactly its own half's joinable ids, never the other run's."""
+    raw, first = two_runs["raw"], two_runs["first"]
+    joinable = (
+        raw["origin_airport_iata"].isin(pdfs["airports"]["iata"])
+        & raw["destination_airport_iata"].isin(pdfs["airports"]["iata"])
+        & raw["airline_icao"].isin(pdfs["airlines"]["ICAO"])
+    )
+    result = two_runs["results"]["run-2"]
+    silver = spark.read.parquet(result.silver_path)
+    for run_id, half in (("run-1", first), ("run-2", ~first)):
+        gold = result.gold.where(result.gold["run_id"] == run_id)
+        gold_ids = [r.id for r in gold.select("id").collect()]
+        silver_ids = {
+            r.id for r in silver.where(silver["run_id"] == run_id).select("id").collect()
+        }
+        assert silver_ids == set(raw[half]["id"])
+        assert sorted(gold_ids) == sorted(set(raw[half & joinable]["id"]))
+        assert two_runs["results"][run_id].run_info["gold_rows"] == len(gold_ids)
+
+
+def test_warm_batch_job_budget(two_runs):
+    """A warm batch (dimensions already on storage) launches 7 jobs:
+
+    1. the airports ``write_if_absent``: its continent-lookup broadcast runs
+       before the ignore-mode write finds the stored dimension;
+    2. the bronze CSV write;
+    3. the silver ``id`` dedup shuffle (map side);
+    4. the silver write;
+    5. gold: the airports broadcast;
+    6. gold: the airlines broadcast;
+    7. the gold write, over the silver rows the run landed.
+
+    No read launches a schema-inference job, and gold does not re-run the
+    dedup shuffle (gold from the silver plan, and reads without a schema,
+    took 11 jobs)."""
+    assert two_runs["warm_jobs"] == 7
+
+
+def test_stored_schemas_leave_the_layer_constants_alone(two_runs):
+    """The stored shapes append ``run_id`` to fresh field lists: after two
+    batches the silver and gold constants keep their field counts."""
+    assert len(schemas.FLIGHTS_SILVER.fields) == 10
+    assert len(schemas.FLIGHTS_GOLD.fields) == 22
+    assert schemas.FLIGHTS_SILVER_STORED.fieldNames()[-1] == "run_id"
+    assert schemas.FLIGHTS_GOLD_STORED.fieldNames() == [
+        *schemas.FLIGHTS_GOLD.fieldNames(),
+        "run_id",
+    ]
+
+
 def test_rerun_overwrite_partitions_is_idempotent(spark, tmp_path, pdfs):
     """A retry after a crash between the silver and gold writes must not
     duplicate rows on storage: overwrite_partitions replaces exactly the
