@@ -18,6 +18,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
+
+from flight_radar_pipeline_spark.sources.flight_api import rows_to_df
 
 # Public ISO-3166 country display names → continent display name, the same
 # surface pycountry_convert's convert_continent_code_to_continent_name
@@ -101,11 +104,18 @@ COUNTRY_TO_CONTINENT: dict[str, str] = {
 
 UNKNOWN = "Unknown"
 
+LOOKUP_SCHEMA = StructType(
+    [StructField("country", StringType(), True), StructField("continent", StringType(), True)]
+)
+
 
 def continent_lookup_df(spark: SparkSession) -> DataFrame:
-    """The lookup table as a 2-column DataFrame (country, continent)."""
-    rows = sorted(COUNTRY_TO_CONTINENT.items())
-    return spark.createDataFrame(rows, schema="country string, continent string")
+    """The lookup table as a 2-column DataFrame (country, continent).
+
+    Built through ``rows_to_df``, so the broadcast that every airports
+    build runs scans an Arrow table in the JVM and starts no Python worker.
+    """
+    return rows_to_df(spark, sorted(COUNTRY_TO_CONTINENT.items()), LOOKUP_SCHEMA)
 
 
 def with_continent(

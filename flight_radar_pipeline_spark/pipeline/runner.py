@@ -18,7 +18,12 @@ parquet → gold parquet) into one callable, engine-shaped:
 
 Scale: the only driver-side materialization is the optional zone fetch
 (bounded by the API, not the engine — and ``fetch_all_distributed`` ships
-it to executors). Bronze and silver are lazy plans over the ingested rows;
+it to executors). Fetched rows land through ``rows_to_df`` as one Arrow
+table that the JVM decodes itself, so the bronze and silver scans of the
+snapshot start no Python worker; a list-path ``createDataFrame`` would
+send every row JVM → Python → JVM on each scan (``_pickled()``'s identity
+``map``). A dimension already on storage is not fetched again. Bronze and
+silver are lazy plans over the ingested rows;
 gold is built from the silver rows this run landed, read back from
 storage, so the raw input is scanned and the ``id`` dedup shuffle runs
 once per batch, not once more for gold. The gold build broadcasts both
@@ -44,7 +49,13 @@ from flight_radar_pipeline_spark.functions.continents import with_continent
 from flight_radar_pipeline_spark.pipeline.gold import build_gold
 from flight_radar_pipeline_spark.pipeline.silver import build_silver
 from flight_radar_pipeline_spark.sinks.writers import write_if_absent, write_partitioned
-from flight_radar_pipeline_spark.sources.flight_api import WORLD, FetchZone, Zone, fetch_all
+from flight_radar_pipeline_spark.sources.flight_api import (
+    WORLD,
+    FetchZone,
+    Zone,
+    fetch_all,
+    rows_to_df,
+)
 from flight_radar_pipeline_spark.sources.readers import read_parquet
 
 
@@ -63,6 +74,13 @@ class PipelineResult:
     run_info: dict
 
 
+def _stored(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, by the Hadoop ``FileSystem`` that
+    ``mode("ignore")`` asks."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(hpath)
+
+
 def _get_or_create_dim(
     spark: SparkSession,
     path: str,
@@ -73,8 +91,12 @@ def _get_or_create_dim(
 ) -> DataFrame:
     """Idempotent dimension materialization: write once, read always.
 
-    ``mode("ignore")`` makes re-runs no-ops at the committer (no listing
-    race); reading back from storage means a run that skipped the write and
+    A dimension already stored at ``path`` is neither fetched nor enriched:
+    the driver asks the path's Hadoop ``FileSystem`` whether it exists,
+    the same test ``mode("ignore")`` makes. ``write_if_absent``'s ignore
+    mode stays the guard for a run that lands the path between that test
+    and its own write; reading back from storage means a run that skipped
+    the write and
     a run that performed it see byte-identical dimensions. ``schema`` is
     the stored shape, passed to the read-back so it launches no
     schema-inference job; ``fetched`` is the shape of the fetched rows when
@@ -82,8 +104,8 @@ def _get_or_create_dim(
     build applies the same rule to the fact: it reads the silver rows this
     run landed instead of re-deriving them.
     """
-    if fetch is not None:
-        dim = spark.createDataFrame(fetch(), schema=fetched or schema)
+    if fetch is not None and not _stored(spark, path):
+        dim = rows_to_df(spark, fetch(), fetched or schema)
         if enrich is not None:
             dim = enrich(dim)
         write_if_absent(dim, path)
@@ -167,7 +189,7 @@ def run_pipeline(
 
     if flights_raw is None:
         rows = fetch_all(fetch_flights, api_limit, zones)
-        flights_raw = spark.createDataFrame(rows, schema=schemas.FLIGHTS_RAW)
+        flights_raw = rows_to_df(spark, rows, schemas.FLIGHTS_RAW)
 
     # bronze: raw rows as landed, date-bucketed CSV like the reference's
     # save_flights_bronze_csv (K2) — kept headerless-typed via explicit schema

@@ -329,3 +329,28 @@ def test_runner_reads_pass_a_schema():
     ]
     assert reads, "no Parquet read found in pipeline/runner.py"
     assert [ast.unparse(n) for n in reads if not has_schema(n)] == []
+
+
+def test_driver_rows_enter_spark_through_rows_to_df():
+    """``pipeline/runner.py`` and ``functions/continents.py`` land driver-side
+    rows only through ``sources.flight_api.rows_to_df`` (one Arrow table the
+    JVM decodes): a list-path ``createDataFrame`` would send every row
+    through a Python worker on each scan."""
+    import ast
+    import inspect
+
+    from flight_radar_pipeline_spark.functions import continents
+    from flight_radar_pipeline_spark.pipeline import runner
+
+    calls = {
+        module.__name__: [
+            ast.unparse(node)
+            for node in ast.walk(ast.parse(inspect.getsource(module)))
+            if isinstance(node, ast.Call)
+            and getattr(node.func, "attr", getattr(node.func, "id", None)) == "createDataFrame"
+        ]
+        for module in (runner, continents)
+    }
+    assert calls == {runner.__name__: [], continents.__name__: []}
+    assert "rows_to_df(spark, rows, schemas.FLIGHTS_RAW)" in inspect.getsource(runner)
+    assert "rows_to_df(" in inspect.getsource(continents.continent_lookup_df)

@@ -128,7 +128,9 @@ def two_runs(spark, tmp_path_factory, pdfs):
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
     warm_jobs = len(sc.statusTracker().getJobIdsForGroup(WARM_GROUP))
-    return {"raw": raw, "first": first, "results": results, "warm_jobs": warm_jobs}
+    return {
+        "base": base, "raw": raw, "first": first, "results": results, "warm_jobs": warm_jobs,
+    }
 
 
 def test_each_run_lands_only_its_own_rows_in_gold(spark, two_runs, pdfs):
@@ -154,21 +156,42 @@ def test_each_run_lands_only_its_own_rows_in_gold(spark, two_runs, pdfs):
 
 
 def test_warm_batch_job_budget(two_runs):
-    """A warm batch (dimensions already on storage) launches 7 jobs:
+    """A warm batch (dimensions already on storage, their fetchers still
+    passed) launches 6 jobs:
 
-    1. the airports ``write_if_absent``: its continent-lookup broadcast runs
-       before the ignore-mode write finds the stored dimension;
-    2. the bronze CSV write;
-    3. the silver ``id`` dedup shuffle (map side);
-    4. the silver write;
-    5. gold: the airports broadcast;
-    6. gold: the airlines broadcast;
-    7. the gold write, over the silver rows the run landed.
+    1. the bronze CSV write;
+    2. the silver ``id`` dedup shuffle (map side);
+    3. the silver write;
+    4. gold: the airports broadcast;
+    5. gold: the airlines broadcast;
+    6. the gold write, over the silver rows the run landed.
 
-    No read launches a schema-inference job, and gold does not re-run the
-    dedup shuffle (gold from the silver plan, and reads without a schema,
-    took 11 jobs)."""
-    assert two_runs["warm_jobs"] == 7
+    A stored dimension is not fetched again, so the airports' continent
+    broadcast no longer runs ahead of an ignore-mode write that finds the
+    path (7 jobs). No read launches a schema-inference job, and gold does
+    not re-run the dedup shuffle (gold from the silver plan, and reads
+    without a schema, took 11 jobs)."""
+    assert two_runs["warm_jobs"] == 6
+
+
+def test_empty_snapshot_lands_nothing_and_counts_zero(spark, two_runs):
+    """A fetch that returns no rows is an Arrow frame of 0 partitions: the
+    batch must still finish its observed writes and count 0 in every
+    layer. It lands in the module lake over its stored dimensions, which
+    it neither fetches nor rewrites, and adds no gold rows."""
+    result = two_runs["results"]["run-2"]
+    gold_before = result.gold.count()
+    empty = run_pipeline(
+        spark,
+        two_runs["base"],
+        fetch_flights=lambda zone: [],
+        fetch_airlines=lambda: pytest.fail("a stored dimension was fetched"),
+        fetch_airports=lambda: pytest.fail("a stored dimension was fetched"),
+        run_id="run-empty",
+    )
+    info = empty.run_info
+    assert (info["silver_rows"], info["gold_rows"], info["quarantined_rows"]) == (0, 0, 0)
+    assert empty.gold.count() == gold_before
 
 
 def test_stored_schemas_leave_the_layer_constants_alone(two_runs):
